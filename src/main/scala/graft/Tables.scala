@@ -37,12 +37,18 @@ object Tables {
     // a 100 TB corpus. getContentSummary is scheme-agnostic and
     // recursive (nested layouts sum correctly). On any failure fall
     // back to "huge", i.e. the at-scale identity: never add a shuffle
-    // because the probe failed.
+    // because the probe failed — and say so on one structured stderr
+    // line, since the fallback also silently drops the spread.
+    val path = s"$d/$name.parquet"
     val bytes = try {
-      val p = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
+      val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        Log.fallback("Tables.spreadKernel", path, e)
+        Long.MaxValue
+    }
     val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
     val par = s.sparkContext.defaultParallelism
     if (bytes / math.max(1L, maxSplit) < par) df.repartition(par) else df

@@ -4,6 +4,7 @@ import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The rebuild of the reference's `Graph` (reference:
   * src/datastore/graph.rs:29-38) as an immutable wrapper around a
@@ -20,16 +21,24 @@ import org.apache.spark.sql.functions._
   *    bookkeeping disappears because dictionaries are derived;
   *  - the 8 access paths (graph.rs:842-1009) → one Catalyst filter.
   *
-  * At 100 TB: triples live partitioned by predicate (the classic
-  * vertical-partitioning RDF layout), so per-predicate scans touch one
-  * directory; BGP joins shuffle on term ids (ints, not strings) and
-  * dictionaries join broadcast when under the threshold.
+  * At 100 TB: persisted triples live partitioned by predicate (the
+  * classic vertical-partitioning RDF layout) as int ids, so
+  * per-predicate scans touch one directory. Like the reference's
+  * `from_backup`, which loads the dictionaries and slices into memory
+  * once (graph.rs:54-222), a restore decodes the ids back to terms
+  * ONCE and keeps the decoded triples cached at MEMORY_AND_DISK (an
+  * oversized store spills instead of failing), so queries and
+  * mutations on a restored store scan that cache instead of joining
+  * the dictionaries again; [[unpersist]] releases it.
   */
 final class TripleStore private (
     val spark: SparkSession,
     triples0: Dataset[Triple],
     /** Mutations since the last lineage cut — see [[derive]]. */
-    mutationDepth: Int = 0) {
+    mutationDepth: Int = 0,
+    /** The decoded triples a restore cached, shared with every store
+      * derived from it — see [[unpersist]]. */
+    restored: Option[Dataset[Triple]] = None) {
 
   /** Replaced only by [[persist]] when re-persisting over this store's
     * own source directory (the checkpointed plan survives the
@@ -60,7 +69,7 @@ final class TripleStore private (
     val cut = every > 0 && mutationDepth + 1 >= every
     val st = new TripleStore(spark,
       if (cut) ds.localCheckpoint(false) else ds,
-      if (cut) 0 else mutationDepth + 1)
+      if (cut) 0 else mutationDepth + 1, restored)
     persistedTo.foreach(st.rememberLocation)
     st
   }
@@ -363,6 +372,16 @@ final class TripleStore private (
     triples.queryExecution.optimizedPlan.stats.sizeInBytes
 
   def cache(): TripleStore = { triples.cache(); this }
+
+  /** Releases what [[cache]] and [[TripleStore.fromBackup]] cached. The
+    * restore's cache is shared with every store derived from it, and
+    * with any other restore of the same path, so they all lose it; the
+    * store stays usable and later reads decode from parquet again. */
+  def unpersist(): TripleStore = {
+    triples.unpersist(blocking = true)
+    restored.foreach(_.unpersist(blocking = true))
+    this
+  }
 }
 
 object TripleStore {
@@ -415,13 +434,18 @@ object TripleStore {
   val BackupMarker = ".graftbackup"
 
   /** Restore from persisted layout (reference: Graph::from_backup,
-    * graph.rs:54-222): join ids back to terms. Validates the layout
-    * (terms/predicates/triples dirs; marker if present) up front, like the
-    * reference's existence checks (graph.rs:167-184) — a clear error
-    * beats a parquet scan failure deep inside a job. Like [[persist]],
-    * the dictionary joins carry no broadcast hint — the dicts scale
-    * with the data, so AQE decides broadcast-vs-shuffle from their
-    * actual size at runtime. */
+    * graph.rs:54-222). Validates the layout (terms/predicates/triples
+    * dirs; marker if present) up front, like the reference's existence
+    * checks (graph.rs:167-184) — a clear error beats a parquet scan
+    * failure deep inside a job. Then decodes once: the id table joins
+    * the term and predicate dictionaries, and the decoded triples are
+    * cached at MEMORY_AND_DISK and materialised before this returns, so
+    * the restore pays the decode and every later query, mutation,
+    * count, iter or export on the store reads the cache. Like
+    * [[persist]], the dictionary joins carry no broadcast hint — the
+    * dicts scale with the data, so AQE decides broadcast-vs-shuffle
+    * from their actual size at runtime. [[TripleStore.unpersist]]
+    * releases the cache. */
   def fromBackup(spark: SparkSession, path: String): TripleStore = {
     import spark.implicits._
     val root = new org.apache.hadoop.fs.Path(path)
@@ -450,8 +474,10 @@ object TripleStore {
       .join(dim(preds, "p", "pid"), $"p_id" === $"pid")
       .select($"s", $"p", $"o")
       .as[Triple]
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ds.count()
     // the reference restores persist_location from head.json
     // (graph.rs:54-222) — a restored graph re-persists in place
-    new TripleStore(spark, ds).rememberLocation(path)
+    new TripleStore(spark, ds, restored = Some(ds)).rememberLocation(path)
   }
 }

@@ -84,6 +84,30 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("a restored store's BGP scans the cached decode; no dictionary join per query") {
+    // restore joins the id table with the dictionaries once and caches
+    // the decoded triples, so a query plan reads that cache instead of
+    // joining the dictionaries again. Not via plan(): its clearCache()
+    // would drop exactly the cache this test inspects.
+    def t(s: String, p: String, o: String) =
+      Triple(RdfTerm.named(s), RdfTerm.named(p), RdfTerm.named(o))
+    val dir = java.nio.file.Files.createTempDirectory("restore_cached").toString
+    TripleStore.fromTriples(spark,
+      Seq(t("a", "p1", "b"), t("a", "p2", "c"), t("b", "p1", "c"))).persist(dir)
+    val st = TripleStore.fromBackup(spark, dir)
+    try {
+      val exec = st.query(query.Sparql.parse("select $x $y where { $x p1 $y }"))
+        .queryExecution.executedPlan
+      // the query's own operators: the walk enters adaptive plans but
+      // not the cached relation, whose plan is the one-off decode
+      val ops = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(exec) { case n => n.nodeName }
+      assert(ops.contains("InMemoryTableScan"), exec)
+      assert(!ops.contains("BroadcastHashJoin"), exec)
+      assert(!ops.contains("SortMergeJoin"), exec)
+    } finally st.unpersist()
+  }
+
   test("OPTIONAL compiles to a left join below the projection") {
     val q = query.Sparql.parse(
       "select $x $n $seg where { $x in_nation $n . optional { $x in_segment $seg } }")

@@ -83,4 +83,20 @@ class TablesSpec extends SparkSpec {
     pin("embeddings", Tables.embeddings(spark, d),
       "vec_id" -> Integral, "embedding" -> FloatVec, "label" -> Integral)
   }
+
+  test("spreadKernel's probe failure falls back to no spread and reports itself") {
+    val dir = java.nio.file.Files.createTempDirectory("spread_probe").toString
+    val df = spark.range(10).toDF("id")
+    val buf = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val out = try Tables.spreadKernel(spark, dir, "absent")(df)
+      finally System.setErr(prevErr)
+    assert(out eq df) // the at-scale identity: no shuffle added
+    val line = buf.toString("UTF-8").linesIterator.find(_.contains("\"fallback\"")).getOrElse(
+      fail(s"no fallback line on stderr: $buf"))
+    assert(line.startsWith("graft: {\"fallback\":\"Tables.spreadKernel\""), line)
+    assert(line.contains(s"\"path\":\"$dir/absent.parquet\""), line)
+    assert(line.contains("FileNotFoundException"), line)
+  }
 }

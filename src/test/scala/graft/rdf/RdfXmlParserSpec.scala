@@ -54,13 +54,12 @@ class RdfXmlParserSpec extends SparkSpec {
     assert(ts.contains(Triple(named(ex + "list"), RdfTerm.named(Rdf.TypeIri), RdfTerm.named(Rdf.RdfNs + "Seq"))))
   }
 
-  test("reference corpus files parse (same fixtures as the reference's unit tests)") {
-    // reference pins models/cold-2010 (parser.rs:129-133) and
-    // models/www-2011 (graph.rs:1121-1124)
-    val cold = RdfXmlParser.parseFile("/root/reference/models/cold-2010-complete.rdf")
-    assert(cold.nonEmpty)
-    val www = RdfXmlParser.parseFile("/root/reference/models/www-2011-complete.rdf")
-    assert(www.size > 1000)
+  test("fixture files parse to their hand-computed golden triples") {
+    for (f <- TestCorpus.FixtureFiles) {
+      val ts = RdfXmlParser.parseFile(TestCorpus.fixture(f))
+      val want = TestCorpus.golden(f)
+      assert(ts.sortBy(_.toString) == want.sortBy(_.toString), s"golden mismatch for $f")
+    }
   }
 
   /** blank-insensitive canonical form for round-trip comparison */
@@ -71,18 +70,25 @@ class RdfXmlParserSpec extends SparkSpec {
     }.sorted
 
   test("write → parse round-trips (modulo blank renaming)") {
-    for (f <- Seq("cold-2010-complete.rdf", "eswc-2006-complete.rdf", "scripting-2008-complete.rdf")) {
-      val ts = RdfXmlParser.parseFile(s"/root/reference/models/$f")
+    val gen = TestCorpus.write(
+      java.nio.file.Files.createTempDirectory("rt_corpus"), files = 1, papers = 40)
+    val files = TestCorpus.FixtureFiles.map(TestCorpus.fixture) ++ gen.map(_.toString)
+    for (f <- files) {
+      val ts = RdfXmlParser.parseFile(f)
       val xml = new String(RdfXmlWriter.triplesToRdfXml(ts.iterator), "UTF-8")
       val back = RdfXmlParser.parseString(xml)
       assert(canon(back) == canon(ts), s"round-trip mismatch for $f")
     }
   }
 
-  test("whole reference corpus ingests distributed (53 files, 18 MB)") {
-    val st = graft.store.TripleStore.fromRdf(spark, "/root/reference/models")
+  test("generated multi-file corpus ingests distributed, every parsed triple kept") {
+    val dir = java.nio.file.Files.createTempDirectory("ingest_corpus")
+    val files = TestCorpus.write(dir)
+    val st = graft.store.TripleStore.fromRdf(spark, dir.toString)
     val n = st.count()
-    assert(n > 100000, s"expected >100k triples from the corpus, got $n")
+    val want = files.map(f => RdfXmlParser.parseFile(f.toString).size.toLong).sum
+    assert(n == want, s"ingested $n triples, the files hold $want")
+    assert(n > 10000, s"expected >10k triples from the generated corpus, got $n")
   }
 
   test("GraftExtensions injects native functions at session build time") {

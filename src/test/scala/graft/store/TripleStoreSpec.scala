@@ -86,6 +86,55 @@ class TripleStoreSpec extends SparkSpec {
     mutated.persist() // no-arg persist after mutation re-persists in place
   }
 
+  test("restore → query → mutate → in-place persist → restore returns the mutated set") {
+    val dir = java.nio.file.Files.createTempDirectory("ts_roundtrip").toString
+    TripleStore.fromTriples(spark, graph).persist(dir)
+    val back = TripleStore.fromBackup(spark, dir)
+    val cool = Sparql.parse("select $who where { $who is cool }")
+    assert(back.get(cool).map(_.value).sorted == Seq("gabe", "james"))
+    val mutated = back
+      .insertTriple(t("zoe", "is", "cool"))
+      .removeTriple(t("gabe", "loves", "Ripple"))
+      .update("delete where { $x hates Ripple }")
+    assert(mutated.get(cool).map(_.value).sorted == Seq("gabe", "james", "zoe"))
+    mutated.persist() // in place: overwrites the backup `back` was restored from
+    val want = graph.toSet + t("zoe", "is", "cool") -
+      t("gabe", "loves", "Ripple") - t("james", "hates", "Ripple")
+    assert(mutated.triples.collect().toSet == want) // readable after the overwrite
+    val again = TripleStore.fromBackup(spark, dir)
+    assert(again.triples.collect().toSeq.sortBy(_.toString) == want.toSeq.sortBy(_.toString))
+    assert(again.get(cool).map(_.value).sorted == Seq("gabe", "james", "zoe"))
+    again.unpersist(); mutated.unpersist()
+  }
+
+  test("unpersist releases the restore's cache, also after an in-place persist") {
+    import org.apache.spark.storage.StorageLevel
+    val dir = java.nio.file.Files.createTempDirectory("ts_unpersist").toString
+    TripleStore.fromTriples(spark, graph).persist(dir)
+    val back = TripleStore.fromBackup(spark, dir)
+    val decoded = back.triples
+    assert(decoded.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    back.unpersist()
+    assert(decoded.storageLevel == StorageLevel.NONE)
+    assert(back.count() == graph.size) // still readable: decodes from parquet again
+    // an in-place persist swaps the store's triples for a checkpoint;
+    // unpersist must still find and release the restore's cache
+    val again = TripleStore.fromBackup(spark, dir)
+    val decoded2 = again.triples
+    assert(decoded2.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    again.persist()
+    assert(!(again.triples eq decoded2))
+    again.unpersist()
+    assert(decoded2.storageLevel == StorageLevel.NONE)
+    assert(again.count() == graph.size)
+    // a store derived from a restore releases the cache it reads from
+    val third = TripleStore.fromBackup(spark, dir)
+    val mutated = third.insertTriple(t("zoe", "is", "cool"))
+    mutated.persist()
+    mutated.unpersist()
+    assert(third.triples.storageLevel == StorageLevel.NONE)
+  }
+
   test("fromBackup validates the layout before reading (graph.rs:167-184)") {
     val missing = java.nio.file.Files.createTempDirectory("ts_bad").toString
     assertThrows[IllegalArgumentException]( // empty dir: no parts, no marker
@@ -108,23 +157,34 @@ class TripleStoreSpec extends SparkSpec {
   }
 
   test("fromRdf distributes per file and prefixes blank nodes") {
-    val st = TripleStore.fromRdf(spark, "/root/reference/models/cold-2010-complete.rdf")
-    assert(st.count() > 0)
-    // blanks from different files can't collide: all have f<idx>_ prefix
-    val blanks = st.triples.collect().flatMap(tr => Seq(tr.s, tr.o))
-      .filter(_.kind == RdfTerm.Blank)
-    assert(blanks.forall(_.value.startsWith("f0_")))
+    import graft.rdf.TestCorpus
+    val st = TripleStore.fromRdf(spark, TestCorpus.fixtureDir)
+    // files are indexed in sorted order; each file's blank labels get
+    // its f<idx>_ prefix, so conf-a's and conf-b's "place" and "genid1"
+    // stay four different nodes
+    def prefixed(idx: Int)(t: RdfTerm) =
+      if (t.kind == RdfTerm.Blank) RdfTerm.blank(s"f${idx}_${t.value}") else t
+    val want = TestCorpus.FixtureFiles.zipWithIndex.flatMap { case (f, i) =>
+      TestCorpus.golden(f).map(tr => Triple(prefixed(i)(tr.s), tr.p, prefixed(i)(tr.o)))
+    }
+    val got = st.triples.collect().toSeq
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString))
+    val blanks = got.flatMap(tr => Seq(tr.s, tr.o)).filter(_.kind == RdfTerm.Blank).map(_.value).toSet
+    assert(blanks == Set("f0_place", "f0_genid1", "f1_place", "f1_genid1"))
   }
 
   test("fromRdf reads through the Hadoop FileSystem API (file:// URI, dir and single file)") {
     // A cluster deployment hands fromRdf an HDFS/S3A URI; the listing and
     // the reads must go through Hadoop, not java.io.File. file:// is the
     // scheme-qualified stand-in available in a local JVM.
-    val one = TripleStore.fromRdf(spark, "file:///root/reference/models/cold-2010-complete.rdf")
-    assert(one.count() ==
-      TripleStore.fromRdf(spark, "/root/reference/models/cold-2010-complete.rdf").count())
-    val dir = TripleStore.fromRdf(spark, "file:///root/reference/models")
-    assert(dir.count() == TripleStore.fromRdf(spark, "/root/reference/models").count())
+    import graft.rdf.TestCorpus
+    val file = TestCorpus.fixture("conf-a.rdf")
+    val one = TripleStore.fromRdf(spark, s"file://$file")
+    assert(one.count() == TestCorpus.golden("conf-a.rdf").size)
+    assert(one.count() == TripleStore.fromRdf(spark, file).count())
+    val dir = TripleStore.fromRdf(spark, s"file://${TestCorpus.fixtureDir}")
+    assert(dir.count() == TripleStore.fromRdf(spark, TestCorpus.fixtureDir).count())
+    assert(dir.count() == TestCorpus.FixtureFiles.map(TestCorpus.golden(_).size).sum)
     // Turtle shares the same listing helper
     val tmp = java.nio.file.Files.createTempDirectory("ttl_uri").toString
     java.nio.file.Files.writeString(java.nio.file.Path.of(tmp, "a.ttl"),
@@ -132,23 +192,28 @@ class TripleStoreSpec extends SparkSpec {
     assert(graft.rdf.Turtle.read(spark, s"file://$tmp").count() == 1)
     // missing paths fail fast with a clear error, not an empty scan
     assertThrows[java.io.FileNotFoundException](
-      TripleStore.fromRdf(spark, "file:///root/nonexistent-graft-dir"))
+      TripleStore.fromRdf(spark, s"file://$tmp/nonexistent-graft-dir"))
   }
 
-  test("corpus persists smaller than its RDF/XML source (parquet replaces K2Tree compression)") {
-    val st = TripleStore.fromRdf(spark, "/root/reference/models")
+  test("generated corpus persists smaller than its RDF/XML source (parquet replaces K2Tree compression)") {
+    val src = java.nio.file.Files.createTempDirectory("corpus_src")
+    graft.rdf.TestCorpus.write(src)
+    val st = TripleStore.fromRdf(spark, src.toString)
     val dir = java.nio.file.Files.createTempDirectory("corpus_persist").toString
     st.persist(dir)
     def duBytes(p: java.io.File): Long =
       if (p.isFile) p.length
       else Option(p.listFiles).map(_.map(duBytes).sum).getOrElse(0L)
     val parquetBytes = duBytes(new java.io.File(dir))
-    val xmlBytes = duBytes(new java.io.File("/root/reference/models"))
+    val xmlBytes = duBytes(src.toFile)
     info(f"corpus: xml=${xmlBytes / 1e6}%.1f MB → persisted=${parquetBytes / 1e6}%.1f MB " +
       f"(${100.0 * parquetBytes / xmlBytes}%.0f%%)")
+    assert(xmlBytes > 1000000L, s"generated corpus is only $xmlBytes bytes")
     assert(parquetBytes < xmlBytes)
     // restore equals original
-    assert(TripleStore.fromBackup(spark, dir).count() == st.count())
+    val back = TripleStore.fromBackup(spark, dir)
+    assert(back.count() == st.count())
+    back.unpersist()
   }
 
   test("sparql update: insert/delete data, delete where, insert…where") {
